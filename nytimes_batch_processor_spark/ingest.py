@@ -17,11 +17,12 @@ Semantics preserved:
   always win).
 - O3/O4 idempotent re-run: ingesting the same file twice is a no-op.
 
-Scale notes: the target is partitioned by date — re-ingests prune to the
-incremental date range; the anti-join shuffles only new keys (existing
-side is scanned with partition pruning when a date predicate is pushed).
-At 100 TB the anti-join right side should be the last N days' partitions,
-not the full table.
+Scale notes: the target is partitioned by date, but nothing prunes it
+on re-ingest: the anti-join's existing side scans every key column of
+every partition, so each run's read grows with the whole table, not
+with the batch. The target is read with the batch's own schema, so no
+read starts a footer-inference job. At 100 TB the anti-join right side
+should be the last N days' partitions, not the full table.
 """
 
 from __future__ import annotations
@@ -702,7 +703,12 @@ def upsert_append(new_rows: DataFrame, target_path: str, keys: list[str]) -> Non
     could never produce)."""
     spark = new_rows.sparkSession
     if target_exists(spark, target_path):
-        existing = spark.read.parquet(target_path).select(*keys)
+        # the batch's key schema is the target's: no footer inference
+        existing = (
+            spark.read.schema(new_rows.select(*keys).schema)
+            .parquet(target_path)
+            .select(*keys)
+        )
         to_insert = new_rows.join(existing, on=keys, how="left_anti")
     else:
         to_insert = new_rows
@@ -758,7 +764,7 @@ def ingest_covid_csv(
     upsert_append(deduped, target_path, keys)
     if obs is not None:
         metrics_out.update(obs.get)
-    return spark.read.parquet(target_path)
+    return spark.read.schema(deduped.schema).parquet(target_path)
 
 
 def derive_states_fixture(orders: DataFrame) -> DataFrame:
@@ -907,7 +913,7 @@ def ingest_covid_csv_audited(
     )
     deduped = first_write_wins(typed, keys, "_arrival").drop("_arrival")
     upsert_append(deduped, target_path, keys)
-    return spark.read.parquet(target_path)
+    return spark.read.schema(deduped.schema).parquet(target_path)
 
 
 _HIGH_STATES = ("1-URGENT", "2-HIGH")

@@ -67,53 +67,40 @@ COVID_STATES_KEYS = ["date", "state", "fips"]
 COVID_COUNTIES_KEYS = ["date", "county", "state", "fips"]
 
 # ---------------------------------------------------------------------------
-# Family B — driver fixture star schema (/root/repo/TESTDATA.md). Parquet
-# carries its own schema; these StructTypes document the expected shapes and
-# back schema assertions in tests. `events.ts` is TIMESTAMP(NANOS) on disk,
-# read as LongType (nanos) and converted by sources/readers.py.
+# Family B — the star-schema fixtures (TESTDATA.md). Declared
+# as DDL, like the reference's schema.sql, and passed on every read by
+# sources/readers.py, so no read starts Spark's footer-inference job. The
+# types are what the parquet files hold at every SF: timestamps are
+# naive microsecond TIMESTAMP (isAdjustedToUTC=false), which Spark reads
+# as TIMESTAMP_NTZ. tests/test_schemas.py checks each entry against the
+# schema Spark infers from every fixture directory present.
 # ---------------------------------------------------------------------------
 
-FIXTURE_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-EXPECTED_COLUMNS: dict[str, list[str]] = {
-    "region": ["r_regionkey", "r_name"],
-    "nation": ["n_nationkey", "n_name", "n_regionkey"],
-    "customer": ["c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"],
-    "supplier": ["s_suppkey", "s_name", "s_nationkey", "s_acctbal"],
-    "part": ["p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice"],
-    "orders": [
-        "o_orderkey",
-        "o_custkey",
-        "o_orderstatus",
-        "o_totalprice",
-        "o_orderdate",
-        "o_orderpriority",
-    ],
-    "lineitem": [
-        "l_orderkey",
-        "l_partkey",
-        "l_suppkey",
-        "l_linenumber",
-        "l_quantity",
-        "l_extendedprice",
-        "l_discount",
-        "l_tax",
-        "l_returnflag",
-        "l_linestatus",
-        "l_shipdate",
-    ],
-    "events": ["event_id", "ts", "user_id", "event_type", "value", "props"],
-    "documents": ["doc_id", "text", "lang", "source", "n_chars"],
-    "embeddings": ["vec_id", "embedding", "label"],
+FIXTURE_SCHEMAS: dict[str, str] = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, "
+        "c_mktsegment STRING"
+    ),
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, "
+        "p_size INT, p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
+        "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, "
+        "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, "
+        "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"
+    ),
+    "events": (
+        "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, "
+        "value DOUBLE, props STRING"
+    ),
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
 }

@@ -17,9 +17,6 @@ from pyspark.sql import SparkSession
 # runtime. The driver harness owns its SparkSession; these make fixture
 # reads deterministic regardless of how that session was built.
 RUNTIME_CONFS: dict[str, str] = {
-    # events.parquet stores TIMESTAMP(NANOS); Spark has no nanos type, so
-    # read the raw int64 and convert (sources/readers.py) losslessly.
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Naive (isAdjustedToUTC=false) parquet timestamps -> TIMESTAMP_NTZ so
     # date extraction is timezone-independent.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "true",

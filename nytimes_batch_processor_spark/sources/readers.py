@@ -7,9 +7,11 @@ Spark's CSV datasource covers all three in one declarative scan; there is
 no HTTP source in Spark, so remote inputs are staged to a filesystem path
 first (see ``staging.py``) — deliberately out of the query path.
 
-Scale notes: every reader takes an explicit schema (no inference scan);
-parquet scans get column pruning + predicate pushdown from Catalyst for
-free because downstream operators are declarative. Fixture loads register
+Scale notes: every reader takes an explicit schema, so no read starts
+an inference job (``load_table`` infers only for a table name that
+``schemas.FIXTURE_SCHEMAS`` does not declare); parquet scans get column
+pruning + predicate pushdown from Catalyst for free because downstream
+operators are declarative. Fixture loads register
 temp views so DataFrame- and SQL-expressed operators share one catalog.
 """
 
@@ -20,6 +22,7 @@ from types import SimpleNamespace
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from ..schemas import FIXTURE_SCHEMAS
 from ..session import ensure_runtime_confs
 
 
@@ -78,27 +81,21 @@ def read_csv_quarantine(
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table, normalizing physical quirks:
-
-    - ``events.ts`` is parquet TIMESTAMP(NANOS): Spark reads it as int64
-      nanos (``spark.sql.legacy.parquet.nanosAsLong``); convert with exact
-      integer division (``div 1000`` — float division would lose precision
-      at 1e18 nanos) to a microsecond timestamp.
-    """
+    """Load one table from ``sf_dir``. A fixture table is read with its
+    declared schema (``schemas.FIXTURE_SCHEMAS``), so the read starts no
+    footer-inference job; any other name keeps Spark's inferred read."""
     ensure_runtime_confs(spark)
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
+    reader = spark.read
+    if name in FIXTURE_SCHEMAS:
+        reader = reader.schema(FIXTURE_SCHEMAS[name])
+    return reader.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> SimpleNamespace:
     """Load fixture tables and register each as a temp view of the same
     name (so `spark.sql` and DataFrame operators share one catalog)."""
-    from ..schemas import FIXTURE_TABLES
-
     out: dict[str, DataFrame] = {}
-    for name in names or FIXTURE_TABLES:
+    for name in names or FIXTURE_SCHEMAS:
         df = load_table(spark, sf_dir, name)
         df.createOrReplaceTempView(name)
         out[name] = df

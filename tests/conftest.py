@@ -8,7 +8,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from nytimes_batch_processor_spark.schemas import FIXTURE_TABLES
+from nytimes_batch_processor_spark.schemas import FIXTURE_SCHEMAS
 from nytimes_batch_processor_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -31,7 +31,7 @@ def duck(sf_dir):
     """DuckDB connection with fixture views registered exactly like the
     driver's oracle harness."""
     con = duckdb.connect()
-    for name in FIXTURE_TABLES:
+    for name in FIXTURE_SCHEMAS:
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{sf_dir}/{name}.parquet')"
         )
